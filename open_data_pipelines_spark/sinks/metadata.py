@@ -7,6 +7,11 @@ duration, rows processed, file size, STARTED/SUCCESS/FAILED status,
 error message truncated to 1,000 chars, JSON extras — and append it to
 a ``processing_logs`` table (schema: FIXTURES.md F12,
 ``street_manager.py:253-270``).
+
+The row is built JVM-side (:func:`append_row`: literals over a
+one-partition ``range``), so each append is one task writing one file
+and never starts a Python worker (``createDataFrame([row])`` would run
+a multi-task Python RDD job per log row).
 """
 
 from __future__ import annotations
@@ -17,6 +22,7 @@ import uuid
 from datetime import datetime, timezone
 
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 ERROR_TRUNCATE = 1000  # metadata_logger.py:104
@@ -40,6 +46,13 @@ LOG_SCHEMA = T.StructType(
         T.StructField("additional_info", T.StringType()),
     ]
 )
+
+
+def append_row(spark: SparkSession, path: str, schema: T.StructType, row: dict) -> None:
+    """Append one row (missing fields NULL) to the parquet dataset at
+    ``path``: one task, one part file, no Python worker."""
+    cols = [F.lit(row.get(f.name)).cast(f.dataType).alias(f.name) for f in schema.fields]
+    spark.range(1, numPartitions=1).select(*cols).write.mode("append").parquet(path)
 
 
 class MetadataLogger:
@@ -100,9 +113,5 @@ class MetadataLogger:
             "error_message": error,
             "additional_info": json.dumps(self.extras, sort_keys=True) if self.extras else None,
         }
-        (
-            self.spark.createDataFrame([row], LOG_SCHEMA)
-            .write.mode("append")
-            .parquet(self.log_path)
-        )
+        append_row(self.spark, self.log_path, LOG_SCHEMA, row)
         return False  # never swallow the exception

@@ -29,7 +29,7 @@ import logging
 import time
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 log = logging.getLogger(__name__)
@@ -55,15 +55,26 @@ def write_month_partition(
     path: str,
     year_col: str = "year",
     month_col: str = "month",
-) -> None:
+) -> int:
     """I2: idempotent month reload — dynamic partition overwrite
-    replaces only the (year, month) partitions present in ``df``."""
+    replaces only the (year, month) partitions present in ``df``.
+
+    Returns the number of rows written. Because the overwrite replaces
+    exactly the partitions present in ``df``, that is also the row count
+    of those partitions afterwards — the reference's ``rows_processed``
+    read straight off its insert (``metadata_logger.py:35-137``). An
+    observation rides the write itself, so counting costs no second job
+    (no re-scan, no re-decode of the source); an empty frame reads 0.
+    """
+    obs = Observation()
     (
-        df.write.mode("overwrite")
+        df.observe(obs, F.count(F.lit(1)).alias("rows"))
+        .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy(year_col, month_col)
         .parquet(path)
     )
+    return int(obs.get["rows"])
 
 
 def truncate_staging(spark: SparkSession, path: str, schema) -> None:

@@ -15,12 +15,16 @@ The reference streams remote ZIPs member-by-member in bounded memory
 - **executor-side decompression** (:func:`zip_lines_distributed`,
   :func:`read_zip_csv_distributed`): a *fleet* of zips on (object)
   storage is scanned with ``binaryFile`` and decompressed inside an
-  Arrow-batched ``mapInPandas`` — no driver involvement, parallelism =
-  number of zips. This is the 100 TB backfill shape (e.g. re-ingesting
-  60 monthly Street Manager drops at once). Each task holds one whole
-  zip in memory (``binaryFile`` semantics) — bound zip size by
-  ``spark.sql.files.maxPartitionBytes``-style policy at the source,
-  and fall back to the landing path for single multi-GB archives.
+  Arrow-batched ``mapInPandas`` — no driver involvement. This is the
+  100 TB backfill shape (e.g. re-ingesting 60 monthly Street Manager
+  drops at once). The scan is packed into at most
+  ``defaultParallelism`` partitions before the pandas stage: every
+  Python task pays a fixed worker start-up cost, so one task per core
+  beats one task per archive. A task therefore holds one Arrow input
+  batch of whole archives in memory (``binaryFile`` semantics; up to
+  ``spark.sql.execution.arrow.maxRecordsPerBatch`` archives) and emits
+  one archive's rows at a time. Bound archive size by policy at the
+  source and send single multi-GB archives through the landing path.
 
 Member extraction is streamed (``shutil.copyfileobj`` in 1 MiB chunks,
 mirroring the reference's chunk size) — no whole-member buffering.
@@ -111,6 +115,18 @@ def fetch_and_extract(
 
 # --- executor-side decompression (scale path) --------------------------------
 
+def _fleet(spark, path_glob: str):
+    """(path, content) of every archive under ``path_glob``, packed into
+    at most ``defaultParallelism`` partitions (coalesce never widens a
+    narrower scan) so the pandas stage runs one Python task per core."""
+    return (
+        spark.read.format("binaryFile")
+        .load(path_glob)
+        .select("path", "content")
+        .coalesce(spark.sparkContext.defaultParallelism)
+    )
+
+
 def zip_lines_distributed(
     spark,
     path_glob: str,
@@ -133,8 +149,10 @@ def zip_lines_distributed(
         import io
 
         for pdf in batches:
-            rows: dict[str, list] = {"zip_path": [], "member": [], "line": []}
             for zp, content in zip(pdf["path"], pdf["content"]):
+                # one output frame per archive: the buffer never holds
+                # more than one archive's lines
+                rows: dict[str, list] = {"zip_path": [], "member": [], "line": []}
                 with zipfile.ZipFile(io.BytesIO(content)) as zf:
                     for info in zf.infolist():
                         if info.is_dir() or not fnmatch.fnmatch(
@@ -149,10 +167,9 @@ def zip_lines_distributed(
                                 rows["zip_path"].append(zp)
                                 rows["member"].append(info.filename)
                                 rows["line"].append(line)
-            yield pd.DataFrame(rows)
+                yield pd.DataFrame(rows)
 
-    binaries = spark.read.format("binaryFile").load(path_glob)
-    return binaries.select("path", "content").mapInPandas(explode_zip, out_schema)
+    return _fleet(spark, path_glob).mapInPandas(explode_zip, out_schema)
 
 
 def read_zip_csv_distributed(
@@ -164,7 +181,8 @@ def read_zip_csv_distributed(
 ):
     """All-string bronze frame from CSV members across a fleet of zips,
     decompressed + parsed executor-side (S3/S4 bronze contract: every
-    column string; members must share one header). One zip per task.
+    column string; members must share one header). At most one task
+    per core; each yields one member's rows at a time.
 
     Declare ``columns`` in production (the bronze contract prefers
     declared schemas — zero driver reads). When omitted, the header is
@@ -213,5 +231,4 @@ def read_zip_csv_distributed(
                         part.columns = [c.strip().lstrip("\ufeff") for c in part.columns]
                         yield part[columns]
 
-    binaries = spark.read.format("binaryFile").load(path_glob)
-    return binaries.select("path", "content").mapInPandas(parse_members, out_schema)
+    return _fleet(spark, path_glob).mapInPandas(parse_members, out_schema)

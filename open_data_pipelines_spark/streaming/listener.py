@@ -5,7 +5,8 @@ The reference logs one metadata row per batch run
 Streaming the analog is a ``StreamingQueryListener`` that records one
 row per micro-batch progress event (query id, batch id, rows, duration,
 event-time watermark) plus start/termination markers — same
-append-to-parquet sink as the batch logger (SURVEY.md §2.10 I3).
+append-to-parquet sink as the batch logger (SURVEY.md §2.10 I3), and
+the same JVM-side one-row append (``sinks.metadata.append_row``).
 """
 
 from __future__ import annotations
@@ -16,6 +17,8 @@ from datetime import datetime, timezone
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQueryListener
+
+from ..sinks.metadata import append_row
 
 STREAM_LOG_SCHEMA = T.StructType(
     [
@@ -41,14 +44,8 @@ class MetadataStreamListener(StreamingQueryListener):
         self.log_path = log_path
 
     def _write(self, row: dict) -> None:
-        base = {f.name: None for f in STREAM_LOG_SCHEMA.fields}
-        base.update(row)
-        base["created_at"] = datetime.now(timezone.utc).replace(tzinfo=None)
-        (
-            self.spark.createDataFrame([base], STREAM_LOG_SCHEMA)
-            .write.mode("append")
-            .parquet(self.log_path)
-        )
+        row = {**row, "created_at": datetime.now(timezone.utc).replace(tzinfo=None)}
+        append_row(self.spark, self.log_path, STREAM_LOG_SCHEMA, row)
 
     def onQueryStarted(self, event) -> None:
         self._write({"query_id": str(event.id), "run_id": str(event.runId), "event": "STARTED"})
